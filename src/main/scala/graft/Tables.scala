@@ -50,20 +50,40 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** name:size:mtime signature of every file under `dir/table.parquet` —
-    * pure metadata, and any rewrite of the table changes it. The cache
-    * key the in-process artifact stores (cluster labels, frozen
-    * centroids) use so a regenerated table invalidates naturally.
+  /** SHA-256 over the name, size and mtime of every file under
+    * `dir/table.parquet`, plus each `.parquet` file's footer (row counts,
+    * column statistics, chunk offsets), so a same-size, same-mtime rewrite
+    * with different rows still changes it. Reads no data pages: the
+    * [[ArtifactStore]] key computes it on every store call.
     */
   def contentToken(dir: String, tableName: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
       else Seq(f)
-    val sig = walk(new java.io.File(dir, s"$tableName.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    java.lang.Integer.toHexString(sig.hashCode)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    walk(new java.io.File(dir, s"$tableName.parquet")).foreach { f =>
+      md.update(s"${f.getName}:${f.length}:${f.lastModified}|".getBytes("UTF-8"))
+      if (f.isFile && f.getName.endsWith(".parquet")) md.update(parquetFooter(f))
+    }
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
+
+  /** The footer and 8-byte tail of a parquet file: the tail's first four
+    * bytes are the little-endian footer length.
+    */
+  private def parquetFooter(f: java.io.File): Array[Byte] = {
+    val raf = new java.io.RandomAccessFile(f, "r")
+    try {
+      val len = raf.length
+      raf.seek(math.max(0L, len - 8))
+      val n = if (len < 8) 0 else Integer.reverseBytes(raf.readInt())
+      val footer = new Array[Byte](
+        if (n > 0 && n <= len - 8) n + 8 else math.min(len, 8L).toInt)
+      raf.seek(len - footer.length)
+      raf.readFully(footer)
+      footer
+    } finally raf.close()
   }
 
   /** Decouple heavy per-row compute (regex tokenization, shingling,

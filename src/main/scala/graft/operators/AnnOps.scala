@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 
 /** Similarity search over the `embeddings` table (`embedding`:
   * Array[Float], 64-dim).
@@ -92,25 +92,17 @@ object AnnOps {
       .orderBy("q_id", "rank")
   }
 
-  /** In-process frozen query-vector store for the exact baseline: the
-    * first `nQueries` (id, embedding) rows — a bounded constant-size
-    * carve (5×64 floats), the [[LloydOps.frozenCentroids]] pattern. The
-    * exact baseline re-runs inside EVERY recall audit (7 gated entries),
-    * and its query side is this constant: entering it as a typed literal
-    * removes a scan + broadcast build + nested-loop join per audit.
+  /** The first `nQueries` (id, embedding) rows, frozen in the
+    * [[graft.ArtifactStore]] so the exact baseline every recall audit
+    * re-runs takes its query side as a typed literal; the build is one
+    * bounded collect.
     */
-  private val queryStore = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Float])]]()
-
   private def frozenQueries(
-      s: SparkSession, dir: String, nQueries: Int): Seq[(Long, Seq[Float])] = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + nQueries + "#" + Tables.contentToken(dir, "embeddings")
-    queryStore.computeIfAbsent(key, _ =>
+      s: SparkSession, dir: String, nQueries: Int): Seq[(Long, Seq[Float])] =
+    ArtifactStore.literal("queries", dir, "embeddings", nQueries)(
       Tables.embeddings(s, dir).filter(col("vec_id") < nQueries)
         .select(col("vec_id"), col("embedding")).orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq)
-  }
 
   /** Exact top-k nearest neighbors (cosine) of the first `nQueries`
     * vectors against the whole table, self-matches excluded. The query

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 
 /** Near-duplicate clustering + canonical survivor selection — the step a
   * real training-data pipeline runs AFTER pair detection: near-dup pairs
@@ -33,57 +33,17 @@ object DedupClusterOps {
   val Threshold = 600
   val Iters = 5
 
-  /** Materialized-label store for the converged clustering: the first
-    * consumer pays the pair detection + label propagation ONCE, writes
-    * the labels to a session-external parquet, and every later consumer
-    * — [[dedupSavings]], [[survivorQuality]], [[clusterSizes]],
-    * [[SplitOps.splitAssignments]] — reads that file instead of
-    * recomputing the identical clustering (the production shape: a
-    * curation pipeline materializes cluster labels as a step output and
-    * fans N reports off it; r13 measured ~37 s of the bench suite
-    * re-deriving one clustering four times). Parquet, not `persist`:
-    * the store must survive session recycling and cache clearing, and
-    * on a real cluster a step output IS a table, not executor memory.
-    *
-    * Keys include a CONTENT TOKEN (per-file name+size+mtime of the
-    * documents table), so regenerating the table at the same path within
-    * one JVM invalidates naturally instead of serving stale labels.
-    * Files land under `graft.labelstore.dir` (falling back to
-    * `graft.checkpoint.dir`, then java.io.tmpdir) — set one of the confs
-    * in any long-lived deployment so a tmp-reaper can't collect a label
-    * artifact mid-session.
-    */
-  private val labelStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The converged cluster labels for `dir`'s documents table, computed
-    * at most once per (dir contents, threshold) and served from the
-    * materialized parquet thereafter. Same schema as
-    * [[clustersConverged]]._2.
+  /** The converged cluster labels (same schema as
+    * [[clustersConverged]]._2), frozen in the [[graft.ArtifactStore]] for
+    * [[dedupSavings]], [[survivorQuality]], [[clusterSizes]] and
+    * [[SplitOps.splitAssignments]]; `dedup_clusters` prices the build.
     */
   def convergedLabels(
       s: SparkSession, dir: String,
-      thresholdMilli: Int = Threshold): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + thresholdMilli + "#" + Tables.contentToken(dir, "documents")
-    val path = labelStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-dedup-labels")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-dedup-labels"))
-        .toString
+      thresholdMilli: Int = Threshold): DataFrame =
+    ArtifactStore.frame(s, "dedup-labels", dir, "documents", thresholdMilli)(
       clustersConverged(s, Tables.documents(s, dir), thresholdMilli,
-        pairsIn = Some(storePairs(s, dir, thresholdMilli)))._2
-        .write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+        pairsIn = Some(storePairs(s, dir, thresholdMilli)))._2)
 
   /** Per-document cluster assignment for every document in >= 1 near-dup
     * pair: `(doc_id, cluster, is_survivor)` where `cluster` is the

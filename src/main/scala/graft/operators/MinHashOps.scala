@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 
 /** MinHash + banded-LSH near-duplicate detection over `documents.text`.
   *
@@ -342,46 +342,16 @@ object MinHashOps {
     */
   val PairStoreFloor = 300
 
-  private val pairStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** In-process materialized store of the df-capped exact n-gram-Jaccard
-    * pair set over `dir`'s documents table — the
-    * [[graft.operators.DedupClusterOps.convergedLabels]] /
-    * frozen-centroid pattern pointed at the pair machinery: the
-    * shingle→inverted-index→candidate→verify stage (the dominant cost of
-    * `lsh_miss_audit`, `split_leakage_audit`, `dedup_threshold_curve`,
-    * `dedup_consensus`, the cluster family, `dedup_source_matrix`) runs
-    * ONCE per (documents contents) and every later consumer reads the
-    * scored parquet, filtered to its own threshold. This is also the
-    * right 100 TB shape: a published pair index with many consumers, not
-    * a per-query index rebuild. Build cost stays honestly priced by the
-    * direct-run entries that bypass the store (`dedup_ngram`,
-    * `ngram_stop_shingles`). Content-token keying invalidates on table
-    * rewrite.
+  /** The df-capped exact n-gram-Jaccard pair set at [[PairStoreFloor]],
+    * frozen in the [[graft.ArtifactStore]]; consumers filter to their own
+    * bar. `dedup_ngram` and `ngram_stop_shingles` price the build.
     */
-  def frozenPairs(s: SparkSession, dir: String): DataFrame = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + PairStoreFloor + "#" + Tables.contentToken(dir, "documents")
-    val path = pairStore.computeIfAbsent(key, _ => {
-      val base = s.conf.getOption("graft.labelstore.dir")
-        .orElse(s.conf.getOption("graft.checkpoint.dir"))
-        .map { d =>
-          val p = java.nio.file.Paths.get(d)
-          java.nio.file.Files.createDirectories(p)
-          java.nio.file.Files.createTempDirectory(p, "graft-pair-store")
-        }
-        .getOrElse(
-          java.nio.file.Files.createTempDirectory("graft-pair-store"))
-        .toString
+  def frozenPairs(s: SparkSession, dir: String): DataFrame =
+    ArtifactStore.frame(s, "pairs", dir, "documents", PairStoreFloor) {
       val docs = Tables.documents(s, dir)
       ngramJaccardPairs(docs, PairStoreFloor,
         dfCap = Some(defaultDfCap(docs.count())))
-        .write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** The exploded (doc_id, shingle) index, optionally df-capped: shingles
     * appearing in more than `dfCap` documents are dropped entirely.

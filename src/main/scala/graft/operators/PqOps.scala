@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 
 /** Product-quantization (PQ) similarity search over the `embeddings`
   * table — the design that actually holds a 100 TB embedding store: the
@@ -64,30 +64,16 @@ object PqOps {
   private val QvSql =
     "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0D) AS BIGINT))"
 
-  /** In-process frozen PQ-codebook store, keyed by the embeddings table's
-    * contents — the [[LloydOps.frozenCentroids]] pattern pointed at the
-    * exemplar codebook: the CodebookK quantized exemplar vectors are a
-    * CONSTANT-size artifact (16×64 longs), so they enter every encode /
-    * distance-table expression as a typed literal (a plan constant,
-    * exactly like the Lloyd centroid table) instead of a per-query
-    * collect_list aggregation + broadcast cross join. The build is one
-    * bounded 16-row collect; content-token keying invalidates on table
-    * rewrite. This removed 1-2 scans + a BroadcastNestedLoopJoin from
-    * EVERY query of the PQ family (8 gated entries) with byte-identical
-    * codes/tables.
+  /** The [[CodebookK]] quantized exemplar vectors (16×64 longs), frozen
+    * in the [[graft.ArtifactStore]] so they enter every encode / distance
+    * expression as a typed literal; the build is one bounded collect.
     */
-  private val cbStore =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
-
   private[graft] def frozenCodebook(
-      s: SparkSession, dir: String): Array[Array[Long]] = {
-    val key = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString +
-      "#" + Tables.contentToken(dir, "embeddings")
-    cbStore.computeIfAbsent(key, _ =>
+      s: SparkSession, dir: String): Array[Array[Long]] =
+    ArtifactStore.literal("codebook", dir, "embeddings")(
       quantized(s, dir).filter(col("vec_id") < CodebookK)
         .orderBy("vec_id").collect()
         .map(_.getSeq[Long](1).toArray))
-  }
 
   private def cbLit(cb: Array[Array[Long]]): Column =
     typedlit(cb.map(_.toSeq).toSeq)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import graft.functions.GraftFunctions
 
 /** Avro container sink/source built directly on avro-core — the fifth
@@ -185,9 +185,8 @@ object AvroSink {
     * so any write/read loss breaks the shared oracle hash.
     */
   def roundtripAudit(s: SparkSession, dir: String): DataFrame = {
-    val scratch =
-      s"/tmp/graft-sink-roundtrip/${new java.io.File(dir).getName}-" +
-        s"${ProcessHandle.current().pid()}/documents-avro"
+    val scratch = ArtifactStore.scratch(s,
+      s"sink-roundtrip-${new java.io.File(dir).getName}/documents-avro")
     val docs = Tables.documents(s, dir)
     writePartitioned(docs, scratch, partitionBy = "lang")
     val dataSchema = StructType(docs.schema.fields.filterNot(_.name == "lang"))

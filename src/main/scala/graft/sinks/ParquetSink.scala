@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import graft.functions.GraftFunctions
 
 /** Load-phase parquet writer (reference: analysis/etl_spark.py:250-259
@@ -51,13 +51,12 @@ object ParquetSink {
     * the bench times write + read-back, not just the final aggregate.
     */
   def roundtripAudit(s: SparkSession, dir: String, format: String = "parquet"): DataFrame = {
-    // PID-suffixed scratch: a correctness-gate process and a bench process
+    // Per-JVM scratch: a correctness-gate process and a bench process
     // running concurrently on the same SF must not overwrite each other's
     // roundtrip mid-read (same-process reps still reuse one path). The
     // format lands in the path so the parquet and ORC audits never collide.
-    val scratch =
-      s"/tmp/graft-sink-roundtrip/${new java.io.File(dir).getName}-" +
-        s"${ProcessHandle.current().pid()}/documents-$format"
+    val scratch = ArtifactStore.scratch(s,
+      s"sink-roundtrip-${new java.io.File(dir).getName}/documents-$format")
     // CSV is untyped and headerless by default: the write emits a header
     // and the read-back binds the EXPLICIT schema (inference would be a
     // second full scan and could legitimately drift on an all-digit text

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ArtifactStore
 
 /** Deterministic batch-replay of a streaming query — the entry that puts
   * a REAL Structured Streaming execution inside the driver's DuckDB gate
@@ -424,13 +425,13 @@ object StreamingReplay {
     * digested with the [[graft.sinks.ParquetSink.roundtripAudit]]
     * fidelity rollup against the SAME oracle: any sink-path loss
     * (dropped rows, partition mangling, string corruption, uncommitted
-    * files leaking) breaks the hash. Scratch dirs are PID-suffixed and
-    * wiped per run so a stale checkpoint can never skip the write.
+    * files leaking) breaks the hash. Scratch dirs sit under the per-JVM
+    * [[graft.ArtifactStore]] root and are wiped per run so a stale
+    * checkpoint can never skip the write.
     */
   def ingestReplay(s: SparkSession, dir: String): DataFrame = {
-    val scratch =
-      s"/tmp/graft-streaming-ingest/${new java.io.File(dir).getName}-" +
-        s"${ProcessHandle.current().pid()}"
+    val scratch = ArtifactStore.scratch(s,
+      s"streaming-ingest-${new java.io.File(dir).getName}")
     val hconf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(scratch)
     p.getFileSystem(hconf).delete(p, true)
@@ -566,9 +567,8 @@ object StreamingReplay {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")
     val isLong = raw.schema("ts").dataType == LongType
-    val scratch =
-      s"/tmp/graft-replay-stage/${new java.io.File(dir).getName}-" +
-        s"${ProcessHandle.current().pid()}-$tag"
+    val scratch = ArtifactStore.scratch(s,
+      s"replay-stage-${new java.io.File(dir).getName}-$tag")
     val p = new org.apache.hadoop.fs.Path(scratch)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
